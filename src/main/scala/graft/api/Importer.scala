@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.{Dedup, Merge, Ordinals}
 import graft.operators.Merge.{DuplicateMode, ImportMode, Key}
@@ -89,21 +89,30 @@ object Importer {
   /** Map + transform the raw source through the mapping pipeline. */
   def transformSource(source: DataFrame, targetSchema: StructType,
                       cfg: ImportConfig): DataFrame = {
+    val (trimmed, resolved) = resolveMapping(source, targetSchema, cfg)
+    trimmed.select(resolved.map(_._3): _*)
+  }
+
+  /** The (optionally trimmed) source and every mapping that resolves to
+    * a target field, with its compiled value column. ALL resolved
+    * mappings project: a `col=` mapping with no data column compiles to
+    * an explicit null — dropping it would silently change update
+    * semantics.
+    */
+  private def resolveMapping(source: DataFrame, targetSchema: StructType,
+                             cfg: ImportConfig)
+      : (DataFrame, Seq[(Mapping.ColumnMapping, StructField, Column)]) = {
     val trimmed = if (cfg.trimValues)
       source.select(source.columns.map(c => trim(col(s"`$c`")).as(c)).toIndexedSeq: _*)
     else source
-    val mappings = cfg.mapping match {
-      case Some(s) => Mapping.parseMappingString(s)
-      case None => Mapping.autoMap(targetSchema.fieldNames.toIndexedSeq,
-        trimmed.columns.toIndexedSeq)
-    }
-    val cols: Seq[Column] = mappings.flatMap { m =>
-      targetSchema.fields.find(_.name.equalsIgnoreCase(m.dbColumn))
-        .map(f => Mapping.compile(m, f, cfg.importTz, cfg.dbTz,
-          cfg.dateFormat, cfg.dateTimeFormat))
-    }
-    require(cols.nonEmpty, "mapping resolved no columns")
-    trimmed.select(cols: _*)
+    val mappings = cfg.mapping.map(Mapping.parseMappingString).getOrElse(
+      Mapping.autoMap(targetSchema.fieldNames.toIndexedSeq, trimmed.columns.toIndexedSeq))
+    val resolved = mappings.flatMap(m =>
+      targetSchema.fields.find(_.name.equalsIgnoreCase(m.dbColumn)).map(f =>
+        (m, f, Mapping.compile(m, f, cfg.importTz, cfg.dbTz,
+          cfg.dateFormat, cfg.dateTimeFormat))))
+    require(resolved.nonEmpty, "mapping resolved no columns")
+    (trimmed, resolved)
   }
 
   /** Spark-evaluable additional insert/update values on the merge path:
@@ -189,27 +198,14 @@ object Importer {
     // corrupt the target, so the validation pass is unconditional;
     // `-logerrors`/errorExportPath only control the side-channel export.
     val (mapped, invalid) = {
-      val trimmed = if (cfg.trimValues)
-        source.select(source.columns.map(c => trim(col(s"`$c`")).as(c)).toIndexedSeq: _*)
-      else source
-      val mappings = cfg.mapping.map(Mapping.parseMappingString).getOrElse(
-        Mapping.autoMap(targetSchema.fieldNames.toIndexedSeq, trimmed.columns.toIndexedSeq))
-      // ALL resolved mappings project (a `col=` mapping with no data
-      // column becomes an explicit null, exactly like transformSource
-      // — dropping it would silently change update semantics)
-      val resolved = mappings.flatMap(m =>
-        targetSchema.fields.find(_.name.equalsIgnoreCase(m.dbColumn)).map(f => (m, f)))
-      require(resolved.nonEmpty, "mapping resolved no columns")
-      val compiled = resolved.map { case (m, f) =>
-        // prefix mapped outputs: raw data columns may share the name
-        Mapping.compile(m, f, cfg.importTz, cfg.dbTz,
-          cfg.dateFormat, cfg.dateTimeFormat).as(s"__graft_m_${f.name}")
-      }
+      val (trimmed, resolved) = resolveMapping(source, targetSchema, cfg)
+      // prefix mapped outputs: raw data columns may share the name
+      val compiled = resolved.map { case (_, f, c) => c.as(s"__graft_m_${f.name}") }
       val combined = trimmed.select((trimmed.columns.map(c => col(s"`$c`")) ++ compiled)
         .toIndexedSeq: _*)
       // a non-empty source value that mapped to null failed its parse
       // (reference: per-value failure marks the row invalid, §2.3)
-      val rules = resolved.flatMap { case (m, f) => m.dataColumn.map(dc =>
+      val rules = resolved.flatMap { case (m, f, _) => m.dataColumn.map(dc =>
         s"invalid value for ${f.name}" ->
           (col(s"`$dc`").isNotNull && trim(col(s"`$dc`")) =!= "" &&
             col(s"__graft_m_${f.name}").isNull))
@@ -220,7 +216,7 @@ object Importer {
           v.errors.select((trimmed.columns.map(c => col(s"`$c`")) :+
             col("error_reason")).toIndexedSeq: _*), p)
       }
-      (v.valid.select(resolved.map { case (_, f) =>
+      (v.valid.select(resolved.map { case (_, f, _) =>
         col(s"__graft_m_${f.name}").as(f.name) }.toIndexedSeq: _*),
         v.errors.count())
     }

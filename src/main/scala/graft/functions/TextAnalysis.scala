@@ -234,7 +234,7 @@ object TextAnalysis {
     // exploded tokens; checkpoint so tokenize+explode runs ONCE
     val tok = docs.select(col(idCol).as("__id"),
         explode(tokens(col(textCol))).as("__t"))
-      .localCheckpoint(true)
+      .transform(graft.operators.Checkpoint(_))
     val vocab = tok.groupBy(col("__t")).agg(count(lit(1)).as("__df"))
     tok.join(vocab, Seq("__t"))
       .groupBy(col("__id"))

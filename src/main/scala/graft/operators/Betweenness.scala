@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * δ(seed, node) excluding each seed's own row (dist 0).
   *
   * Scale shape: `maxHops` forward joins + `maxHops` backward joins,
-  * every frame (seed × frontier)-sized and localCheckpoint-ed per
-  * level (the [[Bfs]]/[[KCore]] loop discipline); the final top-N is
+  * every frame (seed × frontier)-sized and checkpointed per level
+  * (the [[Bfs]]/[[KCore]] loop discipline); the final top-N is
   * a TakeOrdered, never a global sort.
   */
 object Betweenness {
@@ -50,49 +50,41 @@ object Betweenness {
                          topN: Int): DataFrame = {
     require(maxHops >= 2, s"maxHops must be >= 2, got $maxHops")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
+    val adj = Checkpoint(Adjacency.undirected(edges, srcCol, dstCol))
     val seed = seeds.select(col(seeds.columns.head).cast("long").as("seed"))
       .distinct()
     // forward: levels(d) = (seed, node, sigma); dist is implicit in the
-    // level index, so no per-row dist column survives to the shuffles
-    var levels = Vector(
-      seed.select(col("seed"), col("seed").as("node"),
-        lit(1L).as("sigma")).localCheckpoint(true))
-    var visited = levels(0).select(col("seed"), col("node"))
-      .localCheckpoint(true)
+    // level index, so no per-row dist column survives to the shuffles.
+    // Each level's size is observed on its checkpoint job.
+    var levels = Vector(Checkpoint.pin(
+      seed.select(col("seed"), col("seed").as("node"), lit(1L).as("sigma"))))
+    var visited = Checkpoint(levels(0).df.select(col("seed"), col("node")))
     var d = 0
-    while (d < maxHops && !levels(d).isEmpty) {
-      val next = levels(d).join(adj, levels(d)("node") === adj("u"))
+    while (d < maxHops && levels(d).rows > 0) {
+      val lvl = levels(d).df
+      val next = Checkpoint.pin(lvl.join(adj, lvl("node") === adj("u"))
         .select(col("seed"), col("v").as("node"), col("sigma"))
         .groupBy(col("seed"), col("node"))
         .agg(sum(col("sigma")).as("sigma"))
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .localCheckpoint(true)
+        .join(visited, Seq("seed", "node"), "left_anti"))
       levels = levels :+ next
-      visited = visited
-        .unionAll(next.select(col("seed"), col("node")))
-        .localCheckpoint(true)
+      visited = Checkpoint(visited
+        .unionAll(next.df.select(col("seed"), col("node"))))
       d += 1
     }
     // backward: delta(level D) = 0; for d = D−1 … 1 accumulate from the
     // level-(d+1) successors. Terms round 6 dp THEN sum in DECIMAL —
     // deterministic under any aggregation order.
     val deepest = levels.size - 1
-    var delta = levels(deepest)
+    var delta = Checkpoint(levels(deepest).df
       .select(col("seed"), col("node"),
-        lit(BigDecimal(0)).cast("decimal(38,6)").as("delta"))
-      .localCheckpoint(true)
+        lit(BigDecimal(0)).cast("decimal(38,6)").as("delta")))
     var acc: DataFrame = null
     for (dd <- (deepest - 1) to 1 by -1) {
-      val succ = levels(dd + 1).join(delta, Seq("seed", "node"))
+      val succ = levels(dd + 1).df.join(delta, Seq("seed", "node"))
         .select(col("seed"), col("node").as("v"),
           col("sigma").as("__sv"), col("delta").as("__dv"))
-      val lvl = levels(dd)
+      val lvl = levels(dd).df
       val contrib = lvl.join(adj, lvl("node") === adj("u"))
         .select(col("seed"), col("node"), col("sigma"), col("v"))
         .join(succ, Seq("seed", "v"))
@@ -106,12 +98,11 @@ object Betweenness {
         .groupBy(col("seed"), col("node"))
         .agg(sum(col("__t")).cast("decimal(38,6)").as("delta"))
       // a level-dd node with NO in-bound successor contributes δ = 0
-      val full = lvl.select(col("seed"), col("node"))
+      val full = Checkpoint(lvl.select(col("seed"), col("node"))
         .join(contrib, Seq("seed", "node"), "left")
         .select(col("seed"), col("node"),
           coalesce(col("delta"), lit(BigDecimal(0)).cast("decimal(38,6)"))
-            .as("delta"))
-        .localCheckpoint(true)
+            .as("delta")))
       delta = full
       acc = if (acc == null) full else acc.unionAll(full)
     }

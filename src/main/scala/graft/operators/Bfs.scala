@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: work per hop is |frontier ⋈ edges| — proportional to
   * the edges incident to the frontier, never to paths (the visited-set
   * anti join is what kills the path explosion a naive recursive
-  * expansion suffers). The visited set is checkpointed through
-  * `localCheckpoint` each round to cut the growing lineage, same
-  * discipline as [[ConnectedComponents]] / [[PageRank]].
+  * expansion suffers). The visited set goes through [[Checkpoint]]
+  * each round to cut the growing lineage; the frontier's checkpoint
+  * job observes its size, so the emptiness test costs no extra job.
   */
 object Bfs {
 
@@ -33,28 +33,23 @@ object Bfs {
   def reachable(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    // fold to canonical undirected adjacency, both directions present
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val adj = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(eager = true) // scanned once per hop — cut re-reads
-    val seed = seeds.select(col(seeds.columns.head).cast("long").as("node"))
-      .distinct()
-      .withColumn("hop", lit(0))
-    var visited = seed.localCheckpoint(eager = true)
-    var frontier = visited
+    // scanned once per hop — cut re-reads
+    val adj = Checkpoint(Adjacency.undirected(edges, srcCol, dstCol))
+    var frontier = Checkpoint.pin(
+      seeds.select(col(seeds.columns.head).cast("long").as("node"))
+        .distinct()
+        .withColumn("hop", lit(0)))
+    var visited = frontier.df
     var hop = 0
-    while (hop < maxHops && !frontier.isEmpty) {
+    while (hop < maxHops && frontier.rows > 0) {
       hop += 1
-      val next = frontier.join(adj, frontier("node") === adj("u"))
+      val f = frontier.df
+      frontier = Checkpoint.pin(f.join(adj, f("node") === adj("u"))
         .select(col("v").as("node"))
         .distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("hop", lit(hop))
-      frontier = next.localCheckpoint(eager = true)
-      visited = visited.unionAll(frontier).localCheckpoint(eager = true)
+        .withColumn("hop", lit(hop)))
+      visited = Checkpoint(visited.unionAll(frontier.df))
     }
     visited
   }

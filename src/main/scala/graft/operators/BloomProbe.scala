@@ -49,7 +49,7 @@ object BloomProbe {
     // re-evaluated non-deterministic staged lineage could land a row in
     // both outputs or neither
     val probed = staged.withColumn("__maybe", mightContain(keyRepr(keys.map(col))))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val definitelyNew = probed.filter(!col("__maybe")).drop("__maybe")
     val maybe = probed.filter(col("__maybe")).drop("__maybe")
     // only the "maybe" fraction pays the exact anti-join shuffle

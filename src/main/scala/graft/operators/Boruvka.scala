@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * weights), the chosen edges' COMPONENT graph (≤ one edge per
   * component, shrinking every round) runs through the
   * [[ConnectedComponents]] large-star/small-star merge, and node
-  * labels update with one more join. Rounds are localCheckpoint-ed so
-  * plans stay round-sized (the LPA/k-truss discipline). Nothing
-  * corpus-sized ever reaches the driver.
+  * labels update with one more join. Rounds go through [[Checkpoint]]
+  * so plans stay round-sized and their size stats honest (the
+  * pointer-doubling self-joins square the estimate of whatever they
+  * read); the per-round counts are observed on those checkpoint jobs.
+  * Nothing corpus-sized ever reaches the driver.
   *
   * With distinct weights the MST is unique; with ties the (w, a, b)
   * ordering still makes the result deterministic and replayable, so
@@ -40,14 +42,17 @@ object Boruvka {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(aCol).cast("long").as("a"),
+    val e = Checkpoint(edges.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"), col(wCol).cast("long").as("w"))
-      .filter(col("a") =!= col("b"))
-      .localCheckpoint(true)
-    var lab = e.select(col("a").as("node"))
+      .filter(col("a") =!= col("b")))
+    val nodes = Checkpoint.pin(e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node"))).distinct()
-      .select(col("node"), col("node").as("lab"))
-      .localCheckpoint(true)
+      .select(col("node"), col("node").as("lab")))
+    var lab = nodes.df
+    // every forest edge merges exactly two components (the (w, a, b)
+    // total order makes the picks acyclic), so the component count
+    // falls by n_added each round — no per-round distinct-label job
+    var nComp = nodes.rows
     val stats = Vector.newBuilder[(Long, Long, Long, Long)]
     for (r <- 1 to rounds) {
       val el = e
@@ -66,41 +71,39 @@ object Boruvka {
         .groupBy(col("comp"))
         .agg(min(struct(col("w"), col("a"), col("b"), col("la"),
           col("lb"))).as("pick"))
-        .select(col("comp"), col("pick.w").as("w"), col("pick.a").as("a"),
-          col("pick.b").as("b"), col("pick.la").as("la"),
+        .select(col("comp"), col("pick.w").as("w"), col("pick.la").as("la"),
           col("pick.lb").as("lb"))
-        .localCheckpoint(true) // read 3×: stats, ptr, 2-cycle break
-      // both endpoints picking the same edge = one forest edge
-      val Seq((nAdded, wAdded)) = picks
-        .select(col("w"), col("a"), col("b")).distinct()
-        .agg(count(lit(1)), coalesce(sum(col("w")), lit(0L)))
-        .as[(Long, Long)].collect().toSeq
-      if (nAdded > 0) {
-        // merge the chosen-edge component graph by POINTER JUMPING on
-        // the pick digraph instead of a generic ConnectedComponents
-        // call (r14 verdict task: the inner large-star/small-star loop
-        // scheduled ~8 stage-jobs per iteration per round plus
-        // convergence collects — the dominant q262 cost at bench
-        // scale, §2.2 fewer scheduler rounds). Structure exploited:
-        // ptr(c) = the other endpoint of c's pick has out-degree
-        // exactly 1, and every cycle has length 2 — following picks,
-        // edge keys are non-increasing in the (w, a, b, la, lb) total
-        // order (c's pick is minimal over edges incident to c, and
-        // ptr(c)'s incident set contains that edge), so a cycle's keys
-        // are all equal = all the SAME edge = its two endpoints. The
-        // 2-cycle minimum is the tree root; pointer DOUBLING reaches
-        // it in ceil(log2(height)) compositions with height ≤ nAdded
-        // — a bound known from the collect above, so NO per-iteration
-        // convergence probe is scheduled (the win over the CC loop).
-        val ptr = picks.select(col("comp").as("x"),
-          when(col("la") === col("comp"), col("lb"))
-            .otherwise(col("la")).as("p"))
-        var par = ptr.as("f").join(ptr.as("g"), col("f.p") === col("g.x"))
+      // merge the chosen-edge component graph by POINTER JUMPING on
+      // the pick digraph instead of a generic ConnectedComponents
+      // call (whose inner large-star/small-star loop scheduled ~8
+      // stage-jobs per iteration per round plus convergence probes).
+      // Structure exploited: ptr(c) = the other endpoint of c's pick
+      // has out-degree exactly 1, and every cycle has length 2 —
+      // following picks, edge keys are non-increasing in the
+      // (w, a, b, la, lb) total order (c's pick is minimal over edges
+      // incident to c, and ptr(c)'s incident set contains that edge),
+      // so a cycle's keys are all equal = all the SAME edge = its two
+      // endpoints. The 2-cycle minimum is the tree root; pointer
+      // DOUBLING reaches it in ceil(log2(height)) compositions with
+      // height ≤ n_added — a bound known once the first composition's
+      // checkpoint is observed, so NO per-iteration convergence probe
+      // is scheduled.
+      val ptr = picks.select(col("comp").as("x"),
+        when(col("la") === col("comp"), col("lb"))
+          .otherwise(col("la")).as("p"), col("w"))
+      val first = Checkpoint.pin(
+        ptr.as("f").join(ptr.as("g"), col("f.p") === col("g.x"))
           .select(col("f.x").as("x"),
-            when(col("g.p") === col("f.x"),
-              least(col("f.x"), col("f.p")))
-              .otherwise(col("f.p")).as("p"))
-          .localCheckpoint(true)
+            when(col("g.p") === col("f.x"), least(col("f.x"), col("f.p")))
+              .otherwise(col("f.p")).as("p"),
+            col("f.w").as("w"), (col("g.p") === col("f.x")).as("mutual")),
+        count(when(col("mutual"), 1)).as("n_mutual"), sum(col("w")).as("w_all"),
+        sum(when(col("mutual"), col("w"))).as("w_mutual"))
+      // both endpoints picking the same edge (a 2-cycle) = one forest edge
+      val nAdded = first.rows - first.long("n_mutual") / 2
+      val wAdded = first.long("w_all") - first.long("w_mutual") / 2
+      if (nAdded > 0) {
+        var par = first.df.select(col("x"), col("p"))
         val steps = (64 - java.lang.Long.numberOfLeadingZeros(nAdded))
           .max(1) // ceil(log2(nAdded + 1))
         var done = 0
@@ -113,7 +116,7 @@ object Boruvka {
           for (_ <- 1 to batch)
             q = q.as("f").join(q.as("g"), col("f.p") === col("g.x"))
               .select(col("f.x").as("x"), col("g.p").as("p"))
-          par = q.localCheckpoint(true)
+          par = Checkpoint(q)
           done += batch
         }
         // component label = min old label in each root group — exactly
@@ -123,13 +126,11 @@ object Boruvka {
             par.groupBy(col("p")).agg(min(col("x")).as("cluster")),
             Seq("p"))
           .select(col("x").as("lab"), col("cluster"))
-        lab = lab
+        lab = Checkpoint(lab
           .join(newLab, Seq("lab"), "left")
-          .select(col("node"), coalesce(col("cluster"), col("lab")).as("lab"))
-          .localCheckpoint(true)
+          .select(col("node"), coalesce(col("cluster"), col("lab")).as("lab")))
+        nComp -= nAdded
       }
-      val Seq(nComp) = lab.agg(count_distinct(col("lab")))
-        .as[Long].collect().toSeq
       stats += ((r.toLong, nAdded, wAdded, nComp))
     }
     stats.result()

@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   *    one reducer (the failure mode of naive label propagation, which
   *    needs O(diameter) rounds).
   *
-  * Each round materializes with `localCheckpoint` to truncate lineage
+  * Each round materializes through [[Checkpoint]] to truncate lineage
   * (on a cluster this would be a checkpoint to reliable storage —
   * exactly how GraphX/GraphFrames iterate). The per-round convergence
-  * test is two anti-join existence probes, not a full edge-set
-  * comparison.
+  * test reads a (count, Σu+v) witness observed on the checkpoint job;
+  * only a witness-stable round pays for a full edge-set comparison.
   */
 object ConnectedComponents {
 
@@ -37,41 +37,30 @@ object ConnectedComponents {
     */
   def labels(edges: DataFrame, srcCol: String, dstCol: String,
              maxIter: Int = 25): DataFrame = {
-    var e = normalize(edges, srcCol, dstCol).localCheckpoint(true)
-    def stats(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(col("u") + col("v"))).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    // (count, Σu+v) observed on every checkpoint job is the emptiness
+    // and cheap set-equality witness — no separate aggregation job
+    val uv = sum(col("u") + col("v")).as("uv")
+    var e = Checkpoint.pin(normalize(edges, srcCol, dstCol), uv)
     var iter = 0
-    // (count, Σu+v) doubles as the emptiness witness — no separate
-    // isEmpty job. (Running the loop rounds with AQE disabled was
-    // measured and REJECTED: static planning demotes the round joins
-    // to sort-merge against the checkpoints' default size stats —
-    // q262 8.6 → 44.7 s, q252 3.8 → 13.8 s. The per-stage job
-    // scheduling AQE costs is the cheaper side of that trade.)
-    var eStats = stats(e)
-    var done = eStats._1 == 0L
+    var done = e.rows == 0L
     while (!done && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      val nextStats = stats(next)
-      // star-shaped fixpoint: the edge SET is unchanged. (count, Σu+v)
-      // is a cheap one-aggregation witness — rounds that still shrink
-      // skip the set comparison entirely; only a stats-stable round
-      // pays for the one-shuffle symmetric-difference probe.
-      done = nextStats == eStats && {
-        next.unionAll(e).groupBy(col("u"), col("v"))
+      val next = Checkpoint.pin(smallStar(largeStar(e.df)), uv)
+      // star-shaped fixpoint: the edge SET is unchanged. Rounds that
+      // still shrink fail the witness and skip the set comparison; only
+      // a witness-stable round pays for the one-shuffle
+      // symmetric-difference probe.
+      done = next.rows == e.rows && next.long("uv") == e.long("uv") && {
+        next.df.unionAll(e.df).groupBy(col("u"), col("v"))
           .agg(count(lit(1)).as("c")).filter(col("c") =!= 2).isEmpty
       }
-      e.unpersist()
       e = next
-      eStats = nextStats
       iter += 1
     }
     require(done, s"connected components did not converge in $maxIter rounds")
     // converged edges form stars (min, member): members label with the
     // center, centers label with themselves
-    e.select(col("v").as("id"), col("u").as("cluster"))
-      .unionAll(e.select(col("u").as("id"), col("u").as("cluster")))
+    e.df.select(col("v").as("id"), col("u").as("cluster"))
+      .unionAll(e.df.select(col("u").as("id"), col("u").as("cluster")))
       .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
   }
 

@@ -50,7 +50,7 @@ object Dbscan {
       .withColumn("__cx", floor(col("__x") / eps))
       .withColumn("__cy", floor(col("__y") / eps))
       // cells + pair probes + label joins all re-read this projection
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val probe = p.toDF("__id2", "__x2", "__y2", "__cx0", "__cy0")
       .withColumn("__dx", explode(expr("sequence(-1L, 1L)")))
       .withColumn("__dy", explode(expr("sequence(-1L, 1L)")))
@@ -66,12 +66,12 @@ object Dbscan {
           (col("__y") - col("__y2")) * (col("__y") - col("__y2"))
           <= lit(eps2))
       .select(col("__id"), col("__id2"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val cores = nbrs.groupBy(col("__id"))
       .agg(count(lit(1)).as("__nn"))
       .filter(col("__nn") + 1L >= minPts)
       .select(col("__id"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // core-core edges → min-id component labels; isolated cores (no
     // core neighbor) self-label
     val coreEdges = nbrs
@@ -82,7 +82,7 @@ object Dbscan {
       .toDF("__id", "__lab")
       .unionByName(cores.select(col("__id"), col("__id").as("__lab")))
       .groupBy(col("__id")).agg(min(col("__lab")).as("__lab"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // border: non-core with an in-range core → MIN core cluster label
     val border = nbrs
       .join(cores.toDF("__id2"), Seq("__id2"))

@@ -35,7 +35,7 @@ object Dimsum {
     val li = df.select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
       .distinct()
       // the self-join reads both sides; the count dim reads it again
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val cnt = li.groupBy(col("__it")).agg(count(lit(1)).as("__n"))
     val pairs = li.toDF("__bk", "__i")
       .join(li.toDF("__bk", "__j"), Seq("__bk"))

@@ -68,7 +68,7 @@ object EpochResample {
       .agg(count(lit(1)).as("n_rows"),
         sum(col(massCol).cast("decimal(28,0)")).cast("decimal(28,0)")
           .as("mass"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val tot = per.agg(sum(col("mass")).cast("decimal(28,0)").as("__tot"),
       sum(col("n_rows")).as("__n_tot"))
     val p = per.crossJoin(broadcast(tot))

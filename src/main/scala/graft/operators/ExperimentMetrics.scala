@@ -132,7 +132,7 @@ object ExperimentMetrics {
         col(yCol).cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
       // read by the sums AND the per-row pass — materialize once
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val tot = v.agg(count(lit(1)).as("n"),
       sum(col("__x").cast("decimal(19,0)")).as("__sx"),
       sum(col("__y").cast("decimal(19,0)")).as("__sy"))

@@ -28,11 +28,7 @@ object GraphStats {
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
                           dstCol: String): DataFrame = {
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
+    val e = Adjacency.undirected(edges, srcCol, dstCol)
     val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
     val pairs = e
       .join(deg.select(col("u"), col("d").as("du")), Seq("u"))
@@ -74,12 +70,8 @@ object GraphStats {
   def powerLawAlpha(edges: DataFrame, srcCol: String, dstCol: String,
                     dmin: Long): DataFrame = {
     require(dmin >= 1, s"dmin must be >= 1, got $dmin")
-    val e0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-    e.groupBy("u").agg(count(lit(1)).as("d"))
+    Adjacency.undirected(edges, srcCol, dstCol)
+      .groupBy("u").agg(count(lit(1)).as("d"))
       .filter(col("d") >= dmin)
       .agg(count(lit(1)).as("n_tail"),
         sum(round(log(col("d").cast("double") / lit(dmin - 0.5)), 6)
@@ -125,7 +117,7 @@ object GraphStats {
       // node-sized; read by the club-node count and both edge-end
       // decorations — pin it so the edge frame is scanned twice total
       // (degree build + club-edge count), never once per threshold
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // limit() marks the literal threshold frame visibly bounded for
     // plan audits; it is |thresholds| rows by construction
     val ths = broadcast(

@@ -13,19 +13,11 @@ import org.apache.spark.sql.functions._
   * side combining) plus TWO node-key semi joins restricting the edge
   * list to surviving endpoints — all hash shuffles on the node key,
   * no driver-side graph, no global structure. The edge frame is
-  * `localCheckpoint`ed each round (same lineage discipline as
-  * [[Bfs]]/[[ConnectedComponents]]); work per round is proportional
-  * to the SURVIVING edge set, which only shrinks.
+  * checkpointed each round ([[Checkpoint]], which also observes the
+  * edge count the convergence test reads); work per round is
+  * proportional to the SURVIVING edge set, which only shrinks.
   */
 object KCore {
-
-  private def undirected(edges: DataFrame, srcCol: String,
-                         dstCol: String): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-  }
 
   /** one peel: drop nodes with fewer than k surviving neighbors */
   private def peelOnce(adj: DataFrame, k: Int): DataFrame = {
@@ -34,6 +26,27 @@ object KCore {
     adj.join(keep, Seq("u"), "left_semi")
       .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
       .select("u", "v")
+  }
+
+  /** At most `rounds` peels, stopping once a round drops no edge (a
+    * converged or empty set peels to itself, so stopping early is
+    * EXACTLY the fixed-round result). Each round's edge count is
+    * observed on its checkpoint job. Returns `(node, deg)` of the
+    * survivors and whether the peel converged.
+    */
+  private def peel(edges: DataFrame, srcCol: String, dstCol: String,
+                   k: Int, rounds: Int): (DataFrame, Boolean) = {
+    var adj = Checkpoint.pin(Adjacency.undirected(edges, srcCol, dstCol))
+    var stable = adj.rows == 0L
+    var round = 0
+    while (round < rounds && !stable) {
+      round += 1
+      val next = Checkpoint.pin(peelOnce(adj.df, k))
+      // edge count stable <=> no node dropped
+      stable = next.rows == adj.rows || next.rows == 0L
+      adj = next
+    }
+    (adj.df.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg")), stable)
   }
 
   /** EXACTLY `rounds` peel iterations (idempotent once converged):
@@ -45,20 +58,7 @@ object KCore {
   def peelRounds(edges: DataFrame, srcCol: String, dstCol: String,
                  k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, s"need k >= 1, rounds >= 0")
-    var adj = undirected(edges, srcCol, dstCol).localCheckpoint(eager = true)
-    var round = 0
-    var n = adj.count() // cheap on the checkpointed frame
-    // a converged (or empty) set peels to itself, so stopping early is
-    // EXACTLY the fixed-round result — without burning no-op jobs
-    var stable = n == 0L
-    while (round < rounds && !stable) {
-      round += 1
-      adj = peelOnce(adj, k).localCheckpoint(eager = true)
-      val n2 = adj.count() // edge count stable <=> no node dropped
-      stable = n2 == n || n2 == 0L
-      n = n2
-    }
-    adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+    peel(edges, srcCol, dstCol, k, rounds)._1
   }
 
   /** The true k-core: peel to the fixpoint (at most `maxRounds`
@@ -68,18 +68,8 @@ object KCore {
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 64): DataFrame = {
-    var adj = undirected(edges, srcCol, dstCol).localCheckpoint(eager = true)
-    var n = adj.count()
-    var converged = n == 0L
-    var round = 0
-    while (!converged) {
-      require(round < maxRounds, s"k-core did not converge in $maxRounds rounds")
-      round += 1
-      adj = peelOnce(adj, k).localCheckpoint(eager = true)
-      val n2 = adj.count() // edge count stable <=> no node was dropped
-      converged = n2 == n || n2 == 0L
-      n = n2
-    }
-    adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+    val (core, converged) = peel(edges, srcCol, dstCol, k, maxRounds)
+    require(converged, s"k-core did not converge in $maxRounds rounds")
+    core
   }
 }

@@ -45,7 +45,7 @@ object KMeans {
       .select(col("__v")).as[Seq[Double]].collect()
       .zipWithIndex.map { case (v, i) => (i + 1L, v) }.toSeq
       .toDF("cluster_id", "centroid")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     for (_ <- 1 to iters) {
       val assigned = assign(pts, cents)
       val updated = assigned
@@ -62,7 +62,7 @@ object KMeans {
         .join(updated.as("new"), Seq("cluster_id"), "left")
         .select(col("cluster_id"),
           coalesce(col("new.centroid"), col("old.centroid")).as("centroid"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
     }
     cents
   }
@@ -84,7 +84,7 @@ object KMeans {
   private def prepare(points: DataFrame, idCol: String, vecCol: String): DataFrame =
     points.select(col(idCol).as("__pid"),
         transform(col(vecCol), x => x.cast("double")).as("__v"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
 
   /** Hard assignment of every point to its argmax-cosine centroid (ties
     * to the lowest cluster id, NaN similarities sort largest — the

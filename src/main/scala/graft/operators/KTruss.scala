@@ -49,7 +49,7 @@ object KTruss {
                               k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = canonical.localCheckpoint(true)
+    var e = Checkpoint(canonical)
     var t = tris // shrinks in lockstep with e when provided
     for (_ <- 1 to rounds) {
       val support = t match {
@@ -63,11 +63,9 @@ object KTruss {
       // so the former `e ⟕ support` join + coalesce filter re-derived
       // this set while paying one extra exchange + join of the full
       // edge list per round (§2.4 remove shuffles outright)
-      e = support.filter(col("support") >= (k - 2).toLong)
-        .select(col("lo"), col("hi"))
-        .localCheckpoint(true)
-      t = t.map(tt =>
-        Triangles.filterByEdges(tt, e).localCheckpoint(true))
+      e = Checkpoint(support.filter(col("support") >= (k - 2).toLong)
+        .select(col("lo"), col("hi")))
+      t = t.map(tt => Checkpoint(Triangles.filterByEdges(tt, e)))
     }
     val finalSupport = t match {
       case Some(tt) => Triangles.edgeSupportFromTriangles(tt)

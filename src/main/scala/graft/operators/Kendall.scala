@@ -53,7 +53,7 @@ object Kendall {
       // both self-join sides read this frame — materialize the (small,
       // pre-aggregated) series once instead of re-running its upstream
       // aggregation twice (the Quantiles localCheckpoint pattern)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val a = base.toDF((groupCols ++ Seq("__t", "__x", "__y")): _*)
     val b = base.toDF((groupCols ++ Seq("__t2", "__x2", "__y2")): _*)
     val sx = signum(col("__x") - col("__x2"))

@@ -253,7 +253,7 @@ object KnnGraph {
     // and exchange reuse does not cover the window subtree — unpinned,
     // the whole LSH scoring pipeline ran twice (§1: two ~14 s-CPU job
     // pairs in the q102 profile)
-    val e = edges.localCheckpoint(true)
+    val e = Checkpoint(edges)
     val mutual = e.as("e1").join(e.as("e2"),
         col("e1.query_id") === col("e2.neighbor_id") &&
         col("e1.neighbor_id") === col("e2.query_id") &&

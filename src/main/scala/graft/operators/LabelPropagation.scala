@@ -41,12 +41,12 @@ object LabelPropagation {
     var labels = initialLabels(e)
     for (_ <- 1 to rounds) labels = propagateOnce(e, labels)
     // one checkpoint of the FINAL labeling: withSizes reads it twice
-    withSizes(labels.localCheckpoint(true))
+    withSizes(Checkpoint(labels))
   }
 
   /** Fixpoint face for API callers: identical semantics per round, but
-    * stops as soon as a round changes NO label (one O(nodes) count — a
-    * 1-row driver witness per round, the k-core early-exit discipline)
+    * stops as soon as a round changes NO label (a change count observed
+    * on the round's checkpoint job, the k-core early-exit discipline)
     * instead of always paying `maxRounds` edge joins. `maxRounds` still
     * caps the loop because synchronous LPA can 2-cycle on bipartite
     * structures and never converge. Once converged, the labeling equals
@@ -62,14 +62,16 @@ object LabelPropagation {
     var round = 0
     var changed = 1L
     while (round < maxRounds && changed > 0L) {
-      // materialized per round HERE: each round's labels feed both the
-      // change probe and the next round (propagateOnce itself no longer
-      // checkpoints)
-      val next = propagateOnce(e, labels).localCheckpoint(true)
-      changed = next
-        .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-        .filter(col("label") =!= col("prev")).count()
-      labels = next
+      // materialized per round HERE, with the previous label alongside
+      // so the checkpoint job itself counts the changes (propagateOnce
+      // itself does not checkpoint)
+      val next = Checkpoint.pin(propagateOnce(e, labels)
+          .join(labels.withColumnRenamed("label", "prev"), Seq("node"), "left")
+          .select(col("node"), col("label"),
+            (col("label") =!= col("prev")).as("__chg")),
+        count(when(col("__chg"), 1)).as("changed"))
+      changed = next.long("changed")
+      labels = next.df.select(col("node"), col("label"))
       round += 1
     }
     withSizes(labels)
@@ -99,7 +101,7 @@ object LabelPropagation {
                  labelCol: String): DataFrame = {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     val intra = e0
       .join(lab.toDF("src", "__la"), Seq("src"))
@@ -142,15 +144,13 @@ object LabelPropagation {
     // construction (the co-purchase artifact) — skip the one remaining
     // distinct too (§2.4)
     val e0 = if (assumeCanonical) e0raw else e0raw.distinct()
-    e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+    Checkpoint(e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(col("dst")))
   }
 
   private def initialLabels(e: DataFrame): DataFrame =
-    e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
+    Checkpoint(e.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
 
   /** One synchronous round: node <- arg-max over neighbor-label counts;
     * min(struct(-count, label)) is ONE hash aggregation (count desc
@@ -193,11 +193,11 @@ object LabelPropagation {
       // joins it on dst — re-key ONCE before the checkpoint instead of
       // paying a sampled-edge shuffle per round (guide §2.4)
       .repartition(col("dst"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     var labels = initialLabels(sampled)
     for (_ <- 1 to rounds) labels = propagateOnce(sampled, labels)
     // one checkpoint of the FINAL labeling: withSizes reads it twice
-    withSizes(labels.localCheckpoint(true))
+    withSizes(Checkpoint(labels))
   }
 
   /** NOT materialized: each round's labels feed exactly ONE consumer in

@@ -26,7 +26,7 @@ object LineDedup {
     val lines = docs.select(col(idCol).as("__id"),
         posexplode(split(col(textCol), "\n")).as(Seq("__idx", "__line")))
       .withColumn("__key", trim(col("__line")))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val freq = lines.select(col("__id"), col("__key")).distinct()
       .groupBy(col("__key")).agg(count(lit(1)).as("__df"))
     lines.join(freq, Seq("__key"))

@@ -42,7 +42,7 @@ object Matching {
         col("__s").isNotNull && col("__o").isNotNull)
       // both branches below re-read this projection — tiny vs the
       // upstream join that typically builds the outcome column
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // floor(score/caliper) via (s − pmod) DIV c: exact for NEGATIVE
     // scores too (pmod ≥ 0 makes the numerator an exact multiple of c,
     // so truncating DIV equals floor) — pure 64-bit integer throughout;

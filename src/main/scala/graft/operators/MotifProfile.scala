@@ -50,7 +50,7 @@ object MotifProfile {
     val wins = base
       .select(row_number().over(w).cast("long").as("__i") +: winCols: _*)
       .filter(col(s"__w${windowLen - 1}").isNotNull)
-      .localCheckpoint(true) // tiny; read by both join sides
+      .transform(Checkpoint(_)) // tiny; read by both join sides
     val a = wins.toDF(("__i" +: (0 until windowLen).map(j => s"__a$j")): _*)
     val b = wins.toDF(("__j" +: (0 until windowLen).map(j => s"__b$j")): _*)
     // hybrid ssd (the Spearman q177 lesson, applied the fast way

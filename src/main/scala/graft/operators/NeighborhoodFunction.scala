@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * (quadratic output at 100 TB), while a round here is one edge
   * equi-join + one hash aggregation whose native `kmv_lows` partials
   * bound the exchange at k longs per node — O(edges · k) work per
-  * round, PageRank-iteration shape. Rounds are localCheckpoint-ed so
-  * plans stay round-sized.
+  * round, PageRank-iteration shape. Rounds are checkpointed so plans
+  * stay round-sized.
   */
 object NeighborhoodFunction {
 
@@ -38,17 +38,13 @@ object NeighborhoodFunction {
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val e = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(col("dst"))
-      .localCheckpoint(true)
+    val e = Checkpoint(Adjacency.undirected(edges, srcCol, dstCol)
+      .select(col("u").as("src"), col("v").as("dst"))
+      .repartition(col("dst")))
     // round-0 sketch: the node's own hash (ball of radius 0 = {self})
-    var state = e.select(col("src").as("node")).distinct()
+    var state = Checkpoint(e.select(col("src").as("node")).distinct()
       .select(col("node"),
-        array(Sketches.hash48(col("node").cast("string"))).as("lows"))
-      .localCheckpoint(true)
+        array(Sketches.hash48(col("node").cast("string"))).as("lows")))
     val perRound = Seq.newBuilder[DataFrame]
     perRound += estimates(state, k).select(lit(0L).as("radius"),
       col("node"), col("n_kept"), col("est"))
@@ -57,10 +53,9 @@ object NeighborhoodFunction {
       val fromNbrs = e.join(exploded.withColumnRenamed("node", "dst"),
           Seq("dst"))
         .select(col("src").as("node"), col("h"))
-      state = exploded.unionByName(fromNbrs)
+      state = Checkpoint(exploded.unionByName(fromNbrs)
         .groupBy(col("node"))
-        .agg(graft.plans.KmvLowsAgg.kmvLows(col("h"), k).as("lows"))
-        .localCheckpoint(true)
+        .agg(graft.plans.KmvLowsAgg.kmvLows(col("h"), k).as("lows")))
       perRound += estimates(state, k).select(lit(r.toLong).as("radius"),
         col("node"), col("n_kept"), col("est"))
     }

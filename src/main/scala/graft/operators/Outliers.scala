@@ -34,7 +34,7 @@ object Outliers {
       // read twice (the MAD quantile pass and the final outlier agg) —
       // materialize once instead of re-scanning the fact table and
       // re-paying the median broadcast join per consumer
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val mads = Quantiles.exactQuantiles(
         devs.select(groupCols.map(col) :+ col("__dev"): _*),
         groupCols, "__dev", Seq(0.5))

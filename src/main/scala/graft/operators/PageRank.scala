@@ -30,22 +30,19 @@ object PageRank {
             iters: Int = 3, damping: Double = 0.85,
             knownDistinct: Boolean = false): DataFrame = {
     val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e0 = (if (knownDistinct) raw else raw.distinct())
-      .localCheckpoint(true)
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
+    val e0 = Checkpoint(if (knownDistinct) raw else raw.distinct())
+    val Checkpoint.Pinned(nodes, n, _) = Checkpoint.pin(
+      e0.select(col("src").as("node"))
+        .union(e0.select(col("dst").as("node"))).distinct())
     // outdeg is loop-invariant: fold it into the edge list ONCE so each
     // iteration is exactly one join (ranks onto sources — typically a
     // broadcast of the node-sized rank table) plus one aggregation.
     // Hash-partition the checkpointed edges on src: the per-iteration
     // join then reuses this layout and only the node-sized rank table
     // moves — the O(edges) side never re-shuffles.
-    val e = e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
+    val e = Checkpoint(
+      e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
+        .repartition(col("src")))
     val base = (1.0 - damping) / n
     // iterations are NOT checkpointed: each round's rank table feeds
     // exactly one consumer (the next round), so the k rounds fuse into
@@ -79,24 +76,20 @@ object PageRank {
                         damping: Double = 0.85,
                         knownDistinct: Boolean = false): DataFrame = {
     val raw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e0 = (if (knownDistinct) raw else raw.distinct())
-      .localCheckpoint(true)
+    val e0 = Checkpoint(if (knownDistinct) raw else raw.distinct())
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
-    val seed = nodes.join(
-        seeds.select(col(seeds.columns.head).cast("long").as("node")).distinct(),
-        Seq("node"), "left_semi")
-      .localCheckpoint(true)
-    val k = seed.count()
+    val Checkpoint.Pinned(seed, k, _) = Checkpoint.pin(nodes.join(
+      seeds.select(col(seeds.columns.head).cast("long").as("node")).distinct(),
+      Seq("node"), "left_semi"))
     require(k > 0, "no seed intersects the graph")
-    val restart = nodes.join(seed.withColumn("__s", lit(1)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s").isNotNull, lit(1.0 / k)).otherwise(lit(0.0)).as("rm"))
-      .localCheckpoint(true)
-    val e = e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
+    val restart = Checkpoint(
+      nodes.join(seed.withColumn("__s", lit(1)), Seq("node"), "left")
+        .select(col("node"),
+          when(col("__s").isNotNull, lit(1.0 / k)).otherwise(lit(0.0)).as("rm")))
+    val e = Checkpoint(
+      e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), Seq("src"))
+        .repartition(col("src")))
     var p = restart.select(col("node"), col("rm").as("pr"))
     // un-checkpointed rounds fuse into one linear job — see [[ranks]]
     for (_ <- 1 to iters) {

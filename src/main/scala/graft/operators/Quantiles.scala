@@ -39,7 +39,7 @@ object Quantiles {
         df.filter(col(valueCol).isNotNull)
           .select((gCols :+ col(valueCol).as("__val")): _*),
         gCols :+ col("__val").asc, name = "__rn")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // groups are contiguous under the (group, value) sort, so the
     // group-local 0-based rank is the global ordinal minus the base
     val sizes = ranked.groupBy(gCols: _*)
@@ -108,16 +108,15 @@ object Quantiles {
     val a = Ordinals.withOrderedOrdinal(df, order, name = "__ra")
     // reference tie order is immaterial: equal values occupy adjacent
     // ranks and map to the same v_norm whichever order they land in
-    val b = Ordinals.withOrderedOrdinal(
+    val b = Checkpoint.pin(Ordinals.withOrderedOrdinal(
         ref.select(col(refValueCol).as("__vref")),
         Seq(col("__vref").asc), name = "__rb")
-      .select(col("__rb"), col("__vref"))
-      .localCheckpoint(true)
+      .select(col("__rb"), col("__vref")))
     val na = a.count()
-    val nb = b.count()
+    val nb = b.rows
     require(na > 0 && nb > 0, "both distributions must be non-empty")
     a.withColumn("__target", expr(s"(__ra * ${nb}L + ${na}L - 1L) DIV ${na}L"))
-      .join(b, col("__target") === col("__rb"))
+      .join(b.df, col("__target") === col("__rb"))
       .select(outCols.map(col) :+ col("__vref").as("v_norm"): _*)
   }
 
@@ -130,7 +129,7 @@ object Quantiles {
         df.filter(col(valueCol).isNotNull),
         (gCols :+ col(valueCol).asc) ++ tieBreak, name = "__rn")
       .select((gCols :+ col(valueCol).as("__val") :+ col("__rn")): _*)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val sizes = ranked.groupBy(gCols: _*)
       .agg(min(col("__rn")).as("__base"), count(lit(1)).as("n_values"))
       .withColumn("__cut", expr(s"n_values * ${trimPpm}L DIV 1000000L"))

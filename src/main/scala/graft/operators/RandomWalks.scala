@@ -43,7 +43,7 @@ object RandomWalks {
     val ranked = e
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col("__n")).orderBy(col("__d"))))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val degrees = ranked.groupBy(col("__n"))
       .agg(max(col("__rk")).cast("long").as("__deg"))
     // the frontier is |starts|-sized; checkpointing it each hop keeps
@@ -52,7 +52,7 @@ object RandomWalks {
     var frontier = starts.select(col(startCol).as("walker"))
       .distinct()
       .withColumn("node", col("walker"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val out = Seq.newBuilder[DataFrame]
     out += frontier.select(col("walker"), lit(0L).as("step"), col("node"))
     for (step <- 1 to length) {
@@ -64,7 +64,7 @@ object RandomWalks {
         .join(ranked.withColumnRenamed("__n", "node"),
           Seq("node", "__rk"))
         .select(col("walker"), col("__d").as("node"))
-        .localCheckpoint(true)
+        .transform(Checkpoint(_))
       out += frontier.select(col("walker"), lit(step.toLong).as("step"),
         col("node"))
     }

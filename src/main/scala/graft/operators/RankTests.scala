@@ -101,7 +101,7 @@ object RankTests {
       // consumed by the totals agg AND the per-group join — pin the
       // |distinct values|-sized rank frame so the raw input is scanned
       // once per aggregation key, not once per consumer
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val totals = ranked.agg(
         sum(col("t")).as("n_total"),
         // DECIMAL cubes: see signedRank's tie-cube comment
@@ -129,7 +129,7 @@ object RankTests {
           col("__r2d").cast("decimal(19,0)")).cast("double") /
           (lit(4.0) * col("n_g").cast("double")), 6))
       // groups-sized; read by the term sum AND the final projection
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val s = perGroup.agg(
       sum(col("__term").cast("decimal(38,6)")).cast("double").as("__s"))
     val scalars = totals.crossJoin(s)
@@ -182,7 +182,7 @@ object RankTests {
       // referenced by the k-count action, the completeness filter, and
       // (twice, via the scalar attach) the rank sums — materialize the
       // block×treatment frame once; it is blocks·k rows by contract
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val k = v.select(col("__g")).distinct().count()
     // complete = exactly one row for EVERY treatment: row count k AND
     // distinct-treatment count k (row count alone would accept a

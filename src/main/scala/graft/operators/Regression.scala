@@ -86,7 +86,7 @@ object Regression {
     val base = df.select(col(strataCol).as("__st"),
         col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // self-contained wide-DECIMAL slope (olsPerKey's (4,0) n-cast
     // tops out at 9,999 rows per group — the POOLED fit here sees the
     // whole frame). Headroom contract: |x| ≤ 1e7, |y| ≤ 1e9,
@@ -167,7 +167,7 @@ object Regression {
       // both self-join sides read this frame — materialize the small
       // pre-aggregated series once (the Quantiles localCheckpoint
       // pattern) instead of re-running its upstream agg twice
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val spark = df.sparkSession
     // SALT the self-join: a handful of series keys would otherwise
     // funnel the whole O(n²) pair production through |keys| reducers.

@@ -88,7 +88,7 @@ object Sampling {
         // null token counts weigh 0 (getLong on a null would throw)
         .withColumn("__tok", coalesce(col(tokensCol).cast("long"), lit(0L))),
       Seq(col(sourceCol), col("mix_hash"), col(idCol)), "__tok", "__pre")
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val bases = prefixed.groupBy(col(sourceCol).as("__src"))
       .agg(min(col("__pre")).as("__base"))
     prefixed.join(broadcast(bases), col(sourceCol) === col("__src"))
@@ -255,7 +255,7 @@ object Sampling {
         sum(col(massCol).cast("long")).cast("long").as("mass"))
       // sources-sized; read by the total, the term sum, and the final
       // projection — one corpus scan, not four
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val tot = per.agg(sum(col("mass")).as("__tot"))
     val p = per.crossJoin(broadcast(tot))
       // ppm share in DECIMAL headroom: 1e6·mass wraps a BIGINT once a

@@ -237,16 +237,11 @@ object Similarity {
     * the MinHash text tier). The (bucket, band, key) join space is
     * 2^(planes/bands) finer than the coarse bucket alone, so one hot
     * bucket no longer degenerates to all-pairs.
-    *
-    * @param staging how the multiply-read keyed/banded corpus frame is
-    *        held: in-memory cache by default; `Staging.Spill(DISK_ONLY)`
-    *        or `Staging.Artifact(dir)` for corpus-scale runs.
     */
   def nearDupPairsLsh(corpus: DataFrame, threshold: Double,
                       numPlanes: Int = 24, bands: Int = 4, dim: Int = 64,
                       bucketCol: String = "label",
-                      cId: String = "vec_id", cVec: String = "embedding",
-                      staging: Staging.Mode = Staging.Memory): DataFrame = {
+                      cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     require(numPlanes % bands == 0,
       s"numPlanes ($numPlanes) must divide into bands ($bands)")
     // a dim mismatch would null-pad every zip_with product, turn every
@@ -256,6 +251,7 @@ object Similarity {
       require(r.getInt(0) == dim,
         s"dim ($dim) does not match the embedding length (${r.getInt(0)})")
     }
+    // staged: the band explode and both verify joins read it
     val keyed = Staging.stage(
       corpus.select(col(bucketCol).as("bk"), col(cId).as("id"), col(cVec).as("v"))
         // bits materialized as their own projection so the per-band
@@ -264,12 +260,7 @@ object Similarity {
         // multi-referenced aliases materialized)
         .withColumn("__hp_bits", hyperplaneBits(col("v"), hyperplaneWeights(numPlanes, dim)))
         .withColumn("bandkeys", packBandKeys(col("__hp_bits"), bands, numPlanes / bands))
-        .drop("__hp_bits"),
-      // default Memory = cache, not localCheckpoint — checkpoint size
-      // stats would break broadcast planning downstream; clearCache()
-      // reclaims. Corpus-scale runs elect Spill(DISK_ONLY) or Artifact
-      // (see [[Staging]]).
-      staging, "neardup_keyed")
+        .drop("__hp_bits"))
     val exploded = keyed.select(col("bk"), col("id"),
       posexplode(col("bandkeys")).as(Seq("band_idx", "band_key")))
     val cand = exploded.as("a").join(exploded.as("b"),

@@ -1,52 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** How a multiply-read intermediate frame is held between the stage that
   * produces it and the stages that re-read it (pair generation reads its
-  * shingle/signature frames two or three times).
-  *
-  * The default [[Staging.Memory]] is a plain `.cache()`
-  * (MEMORY_AND_DISK) — right for interactive sf-scale runs, where it
-  * spills rather than fails. A 100 TB run should not gamble executor
-  * memory on a corpus-sized frame: elect [[Staging.Spill]]
-  * (e.g. `StorageLevel.DISK_ONLY`) to keep the block manager out of
-  * memory pressure, or [[Staging.Artifact]] to round-trip through
-  * parquet — which additionally restores accurate file-based size
-  * statistics, so downstream broadcast planning keeps working (a
-  * `localCheckpoint` would report unknown-huge stats and demote the
-  * verify joins to sort-merge; a parquet artifact does not).
+  * shingle/signature frames two or three times): a plain `.cache()`
+  * (MEMORY_AND_DISK — it spills rather than fails), registered with
+  * [[Retained]] so callers release it via `Retained.releaseAll(spark)`
+  * once the result is consumed.
   */
 object Staging {
 
-  sealed trait Mode
-
-  /** `.cache()` — MEMORY_AND_DISK, the in-session default. */
-  case object Memory extends Mode
-
-  /** `persist(level)` with an explicit storage level (DISK_ONLY for
-    * corpus-sized intermediates on memory-tight clusters).
-    */
-  final case class Spill(level: StorageLevel) extends Mode
-
-  /** Write `<dir>/<name>` as parquet and read it back — a durable,
-    * stats-accurate intermediate that survives the session and can be
-    * shared across pipeline stages (the `writeLshIndex` pattern).
-    */
-  final case class Artifact(dir: String) extends Mode
-
-  /** Materialize `df` under `mode`; downstream reads the returned frame.
-    * Memory/Spill stagings are registered with [[Retained]] so callers
-    * can release them via `Retained.releaseAll(spark)` once the result
-    * is consumed (Artifact needs no release — parquet, not cache).
-    */
-  def stage(df: DataFrame, mode: Mode, name: String): DataFrame = mode match {
-    case Memory => Retained.track(df.cache())
-    case Spill(level) => Retained.track(df.persist(level))
-    case Artifact(dir) =>
-      val path = s"$dir/$name"
-      df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.parquet(path)
-  }
+  def stage(df: DataFrame): DataFrame = Retained.track(df.cache())
 }

@@ -39,7 +39,7 @@ object SurvivalTests {
     val perGT = v.groupBy(col("__g"), col("__t"))
       .agg(sum(when(col("__e"), 1L).otherwise(0L)).as("__d"),
         sum(when(col("__e"), 0L).otherwise(1L)).as("__c"))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // the full (time × group) grid so each group's at-risk count is
     // defined at EVERY distinct time, not just its own rows
     val times = perGT.select(col("__t")).distinct()

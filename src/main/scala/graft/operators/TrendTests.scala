@@ -49,7 +49,7 @@ object TrendTests {
         col("__k"), col("__x"))
       // the self-join reads this frame twice and the tie pass once —
       // materialize the small pre-aggregated series one time
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // salt exactly like theilSenSlope: left side on x mod R, right
     // side replicated R ways, each unordered pair produced once. The
     // replication is an inline explode(sequence(…)) — no crossJoin,

@@ -64,7 +64,7 @@ object Triangles {
       .partitionBy(col("src")).orderBy(col("dst"))
     // the one O(m log) pass; read by both rank joins → materialized
     val adj = m.withColumn("rk", row_number().over(byDst))
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     // degrees off the mirrored list directly (hash agg, no window read)
     val deg = m.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))

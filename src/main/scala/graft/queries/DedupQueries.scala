@@ -530,7 +530,7 @@ private[graft] trait DedupQueries { this: SparkEntry.type =>
       // consumed three times below (two pair-join sides + the census);
       // checkpoint the slim 4-column frame instead of recomputing the
       // corpus-derived subtree per consumer
-      .localCheckpoint(true)
+      .transform(operators.Checkpoint(_))
     val pj = dedupPairs(s, d).select(col("id1"), col("id2"))
       .join(assigned.select(col("doc_id").as("id1"), col("split").as("s1"),
         col("doc_split").as("ds1")), "id1")

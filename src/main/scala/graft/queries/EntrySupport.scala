@@ -39,7 +39,7 @@ private[graft] trait EntrySupport { this: SparkEntry.type =>
 
   // ---------------------------------------------------------------- q24
   /** CONTENT-ADDRESSED parquet artifact store for pipeline intermediates
-    * shared by several queries ([[operators.Staging.Artifact]] pattern):
+    * shared by several queries (the `writeLshIndex` pattern):
     * whichever consumer runs first pays the generation pass, everyone
     * else — including LATER SESSIONS — reads parquet.
     *

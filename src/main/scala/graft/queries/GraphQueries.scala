@@ -547,7 +547,7 @@ private[graft] trait GraphQueries { this: SparkEntry.type =>
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
       .agg(count(lit(1)).as("nb"))
-      .localCheckpoint(true) // three threshold consumers, one build
+      .transform(operators.Checkpoint(_)) // three threshold consumers, one build
     val per = (1 to 3).map { t =>
       operators.ConnectedComponents.labels(ed.filter(col("nb") >= t),
           "pa", "pb")

@@ -464,17 +464,15 @@ private[graft] trait RankStatsQueries { this: SparkEntry.type =>
     * oracle in the same exact integer arithmetic.
     */
   def q321CusumAlarm(s: SparkSession, d: String): DataFrame = {
-    val daily = orders(s, d)
+    val daily = operators.Checkpoint.pin(orders(s, d)
       .groupBy(col("o_orderpriority").as("priority"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long").as("day"))
       .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")).cast("long").as("cents"))
-      .localCheckpoint(true)
-    val r = daily.agg(sum(col("cents")).as("__t"), count(lit(1)).as("__n"))
-      .select(expr("__t DIV __n").as("__slack")).head()
-    val slack = r.getLong(0)
-    operators.Changepoint.cusumAlarm(daily, "priority", "day", "cents",
+        .cast("long")).cast("long").as("cents")),
+      sum(col("cents")).as("__t"))
+    val slack = daily.long("__t") / daily.rows
+    operators.Changepoint.cusumAlarm(daily.df, "priority", "day", "cents",
         slack = slack, threshold = 35L * slack)
       .orderBy(col("priority"))
   }

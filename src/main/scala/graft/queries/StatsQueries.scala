@@ -392,11 +392,11 @@ private[graft] trait StatsQueries { this: SparkEntry.type =>
     val toks = documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       .select(explode(functions.TextAnalysis.tokens(col("text"))).as("tok"))
-      .localCheckpoint(true)
+      .transform(operators.Checkpoint(_))
     val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
     val probes = exact
       .orderBy(col("exact_cnt").desc, col("tok")).limit(25)
-      .localCheckpoint(true) // 25 rows, referenced twice
+      .transform(operators.Checkpoint(_)) // 25 rows, referenced twice
     val sketch = Sketches.cmsSketch(toks, "tok", depth = 4, width = 256)
     Sketches.cmsQuery(sketch, probes.select("tok"), "tok",
         depth = 4, width = 256)

@@ -383,7 +383,7 @@ private[graft] trait StreamingQueries { this: SparkEntry.type =>
     val w = streaming.StreamingImport.mergeEachBatch(stream,
       keys = Seq("user_id"),
       loadTarget = () => target,
-      saveTarget = merged => { target = merged.localCheckpoint(true) })
+      saveTarget = merged => { target = operators.Checkpoint(merged) })
     val q = w.option("checkpointLocation", tmp.resolve("ckpt").toString)
       .start()
     try q.processAllAvailable() finally q.stop()

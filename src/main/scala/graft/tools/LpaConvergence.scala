@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpoint
+
 /** Per-round label-change counts for LPA on the co-purchase graph —
   * the measurement behind the frontier optimization: synchronous LPA
   * only needs to RECOMPUTE nodes with a changed neighbor label, so
@@ -24,26 +26,27 @@ object LpaConvergence {
     val edges = li.as("a").join(li.as("b"),
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .select(col("a.pk").as("src"), col("b.pk").as("dst")).distinct()
-    val e0 = edges.unionAll(edges.select(col("dst").as("src"),
+    val e0 = Checkpoint.pin(edges.unionAll(edges.select(col("dst").as("src"),
         col("src").as("dst")))
-      .repartition(col("dst")).localCheckpoint(true)
-    var labels = e0.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint(true)
-    val n = labels.count()
-    println(s"nodes=$n edges_mirrored=${e0.count()}")
+      .repartition(col("dst")))
+    val init = Checkpoint.pin(e0.df.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
+    val n = init.rows
+    println(s"nodes=$n edges_mirrored=${e0.rows}")
+    var labels = init.df
     for (r <- 1 to rounds) {
-      val next = e0.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("node"), col("m.label").as("label"))
-        .localCheckpoint(true)
-      val changed = next.join(
-          labels.withColumnRenamed("label", "prev"), Seq("node"))
-        .filter(col("label") =!= col("prev")).count()
+      val next = Checkpoint.pin(e0.df.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+          .groupBy(col("src").as("node"), col("label"))
+          .agg(count(lit(1)).as("c"))
+          .groupBy(col("node"))
+          .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
+          .select(col("node"), col("m.label").as("label"))
+          .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
+          .select(col("node"), col("label"), (col("label") =!= col("prev")).as("chg")),
+        count(when(col("chg"), 1)).as("changed"))
+      val changed = next.long("changed")
       println(s"round $r: changed=$changed (${100.0 * changed / n}%)")
-      labels = next
+      labels = next.df.select(col("node"), col("label"))
     }
     spark.stop()
   }

@@ -226,37 +226,6 @@ class FunctionsSpec extends SparkSpec {
     assert(domainOnly == "reach me at <EMAIL> ok")
   }
 
-  test("pair staging modes (DISK_ONLY spill, parquet artifact) match the memory cache") {
-    import graft.operators.{Similarity, Staging, TextDedup}
-    import org.apache.spark.storage.StorageLevel
-    // text tier: PPJoin pair generation under each staging mode
-    val docs = spark.read.parquet(sf() + "/documents.parquet")
-      .select(col("doc_id"), col("text")).filter(col("doc_id") < 120)
-    def canonJ(df: org.apache.spark.sql.DataFrame) =
-      df.select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().sorted.toSeq
-    val mem = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text"))
-    val spill = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text",
-      staging = Staging.Spill(StorageLevel.DISK_ONLY)))
-    val artDir = java.nio.file.Files.createTempDirectory("graft_stage_j").toString
-    val art = canonJ(TextDedup.jaccardPairsPrefix(docs, "doc_id", "text",
-      staging = Staging.Artifact(artDir)))
-    assert(mem.nonEmpty && spill == mem && art == mem)
-    // embedding tier: hyperplane-LSH near-dup with planted copies
-    val e = spark.read.parquet(sf() + "/embeddings.parquet")
-      .select(col("vec_id"), col("label"), col("embedding"))
-    val corpus = e.unionAll(e.filter(col("vec_id") % 10 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"), col("label"), col("embedding")))
-    def canonS(df: org.apache.spark.sql.DataFrame) =
-      df.select("id1", "id2").as[(Long, Long)].collect().sorted.toSeq
-    val memL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99))
-    val spillL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99,
-      staging = Staging.Spill(StorageLevel.DISK_ONLY)))
-    val artDirL = java.nio.file.Files.createTempDirectory("graft_stage_l").toString
-    val artL = canonS(Similarity.nearDupPairsLsh(corpus, threshold = 0.99,
-      staging = Staging.Artifact(artDirL)))
-    assert(memL.nonEmpty && spillL == memL && artL == memL)
-  }
-
   test("hyperplane band keys partition a bucket and agree on copies") {
     import graft.operators.Similarity
     val w = Similarity.hyperplaneWeights(12, 4)

@@ -87,21 +87,6 @@ class IndexingSpec extends SparkSpec {
     assert(got.toSeq === want)
   }
 
-  test("bm25TopK is result-identical under Staging.Spill(DISK_ONLY)") {
-    // the staging election must not change a single bit of the result —
-    // DISK_ONLY round-trips the grouped token frame through serialized
-    // blocks, the corpus-scale configuration on memory-tight clusters
-    val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
-    val terms = Seq("merge", "vector", "stream")
-    val mem = InvertedIndex.bm25TopK(docs, "doc_id", "text", terms, k = 20)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val spill = InvertedIndex.bm25TopK(docs, "doc_id", "text", terms, k = 20,
-        staging = Staging.Spill(org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(mem.toSeq === spill.toSeq)
-    spark.catalog.clearCache()
-  }
-
   test("inverted-index search equals brute-force containment") {
     val docs = Tables.documents(spark, sf()).select(col("doc_id"), col("text"))
     val idx = InvertedIndex.build(docs, "doc_id", "text").cache()

@@ -2,11 +2,13 @@ package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.{ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 /** Pins [[Boruvka]] against hand graphs and [[ProductQuantization]] /
   * the q261 transformWithState drain against their invariants.
   */
-class MstPqSpec extends SparkSpec {
+class MstPqSpec extends SparkSpec with TimeLimits {
   import spark.implicits._
 
   test("Boruvka: triangle drops exactly the heaviest edge") {
@@ -38,6 +40,33 @@ class MstPqSpec extends SparkSpec {
       .collect()
     assert(got(0).getLong(1) === 2L && got(0).getLong(3) === 2L)
     assert(got(1).getLong(1) === 0L && got(1).getLong(3) === 2L)
+  }
+
+  test("Boruvka: long-chain merges plan in bounded time") {
+    // 64 segments of 64 nodes on one path. Inside a segment weights rise
+    // left to right, so round 1 picks form 64 chains of height 63
+    // (pointer-doubling steps = 12: four checkpointed batches); the
+    // heavy segment-boundary weights also rise, so round 2 merges the
+    // 64 components along a chain of height 63 (steps = 6). Size
+    // estimates that compound across those checkpoints stall the
+    // driver's planner in BigInteger arithmetic long before the data
+    // (4 095 edges) costs anything.
+    val seg = 64
+    val boundary = 1000000L
+    val edges = (0 until seg * seg - 1).map { i =>
+      val j = i % seg
+      val w = if (j == seg - 1) boundary + i / seg else (j + 1).toLong
+      (i.toLong, i + 1L, w)
+    }.toDF("a", "b", "w")
+    val got = failAfter(60.seconds) {
+      Boruvka.forestRounds(edges, "a", "b", "w", rounds = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3)))
+    }(ThreadSignaler)
+    val inner = seg * (1 to seg - 1).sum.toLong
+    val bridges = (seg - 1) * boundary + (0 until seg - 1).sum
+    assert(got.toSeq === Seq((1L, seg * (seg - 1L), inner, seg.toLong),
+      (2L, seg - 1L, bridges, 1L), (3L, 0L, 0L, 1L)))
   }
 
   test("PQ: codes are in range and deterministic; ADC self-rank top") {

@@ -51,21 +51,12 @@ class RetainedSpec extends SparkSpec {
     assert(Retained.releaseAll(spark) === 0)
   }
 
-  test("Staging.Memory and Spill register; Artifact does not") {
+  test("Staging.stage registers its cache with Retained") {
     cleanSlate()
     val df = Seq(1, 2, 3).toDF("x")
-    Staging.stage(df, Staging.Memory, "m").count()
-    Staging.stage(df.select($"x" + 1 as "x"),
-      Staging.Spill(org.apache.spark.storage.StorageLevel.DISK_ONLY), "s").count()
-    assert(Retained.trackedCount(spark) === 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stage-").toString
-    try {
-      Staging.stage(df, Staging.Artifact(dir), "a").count()
-      assert(Retained.trackedCount(spark) === 2, "Artifact must not register")
-    } finally {
-      Retained.releaseAll(spark)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    }
+    Staging.stage(df).count()
+    assert(Retained.trackedCount(spark) === 1)
+    Retained.releaseAll(spark)
     assert(CacheBridge.isCacheEmpty(spark))
   }
 }
