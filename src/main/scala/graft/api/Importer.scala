@@ -270,7 +270,7 @@ object Importer {
         // pipeline (and the ordinal's partition-count pass) runs once —
         // recomputation could even reorder arrival ordinals.
         val staged = Ordinals.withArrivalOrdinal(mapped, "__graft_ord").cache()
-        val beforeCount = targetLc.count()
+        val beforeCount = JdbcSink.withConnection(url)(c => JdbcSink.countRows(c, table))
         val dupsInSource = staged.count() -
           Dedup.dropDuplicatesKeepFirst(staged, cfg.keyColumns, Seq(col("__graft_ord"))).count()
         // target order for UPDATE_FIRST/MAKE_UNIQUE must break ties WITHIN

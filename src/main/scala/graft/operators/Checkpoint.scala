@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUti
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.graftshim.DatasetBridge
+import org.apache.spark.sql.graftshim.{ContextBridge, DatasetBridge}
 
 /** The one way graft pins an intermediate frame: an eager local
   * checkpoint that cuts the lineage AND reports what the checkpoint job
@@ -41,6 +41,20 @@ object Checkpoint {
     }
   }
 
+  /** Name of the observation every checkpoint job carries, and of its
+    * row-count metric.
+    */
+  private[graft] val Observed = "__checkpoint"
+  private[graft] val RowsMetric = "__rows"
+
+  /** `File.scala:line` of the innermost frame outside this object and
+    * the Java and Scala libraries.
+    */
+  private def callerSite: String =
+    Thread.currentThread.getStackTrace
+      .find(f => !Seq(getClass.getName, "java.", "scala.").exists(f.getClassName.startsWith))
+      .fold("unknown")(f => s"${f.getFileName}:${f.getLineNumber}")
+
   /** Checkpoint `df` and return the pinned frame. */
   def apply(df: DataFrame): DataFrame = pin(df).df
 
@@ -49,13 +63,17 @@ object Checkpoint {
     * the checkpoint job itself.
     */
   def pin(df: DataFrame, metrics: Column*): Pinned = {
-    val observing = df.observe("__checkpoint", count(lit(1)).as("__rows"), metrics: _*)
-    val cp = observing.localCheckpoint(eager = true)
+    val observing = df.observe(Observed, count(lit(1)).as(RowsMetric), metrics: _*)
+    // name the checkpoint job after the operator line that asked for
+    // it, not this file: Spark takes a job's short call site from the
+    // first frame outside Spark, which is always `pin`
+    val cp = ContextBridge.withCallSite(df.sparkSession.sparkContext,
+      s"localCheckpoint at $callerSite")(observing.localCheckpoint(eager = true))
     // read straight off the executed plan the checkpoint job just ran:
     // no listener-bus round trip, unlike an `Observation`
-    val m = observing.queryExecution.observedMetrics("__checkpoint")
+    val m = observing.queryExecution.observedMetrics(Observed)
     val observed = m.getValuesMap[Any](m.schema.fieldNames.toIndexedSeq)
-    val rows = observed("__rows").asInstanceOf[Number].longValue
+    val rows = observed(RowsMetric).asInstanceOf[Number].longValue
     val rdd = cp.queryExecution.logical.asInstanceOf[LogicalRDD]
     val stats = Statistics(
       sizeInBytes = EstimationUtils.getSizePerRow(rdd.output) * rows,
@@ -63,6 +81,6 @@ object Checkpoint {
     val session = df.sparkSession.asInstanceOf[ClassicSession]
     val restated = LogicalRDD(rdd.output, rdd.rdd, rdd.outputPartitioning,
       rdd.outputOrdering, rdd.isStreaming)(session, Some(stats), Some(rdd.constraints))
-    Pinned(DatasetBridge.ofRows(df.sparkSession, restated), rows, observed - "__rows")
+    Pinned(DatasetBridge.ofRows(df.sparkSession, restated), rows, observed - RowsMetric)
   }
 }

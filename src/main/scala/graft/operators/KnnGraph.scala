@@ -139,8 +139,8 @@ object KnnGraph {
     * corpus — r = ⌈log2(n / targetBucketWidth)⌉ clamped to
     * [minBits, maxBits] — so expected bucket width, and with it
     * candidate-pair mass, stays ~targetBucketWidth·n instead of the
-    * fixed-width n²/2^r blow-up (measured via `LshBucketStats` at sf~1:
-    * 157M candidate pairs for 20k vectors at the fixed 4-bit keys;
+    * fixed-width n²/2^r blow-up (PLANS.md, "q102 mutual-kNN sf~1
+    * triage": 157M candidate pairs for 20k vectors at the fixed 4-bit keys;
     * adaptive keys hold the pair mass ~linear in n up to the maxBits
     * cap, past which the hot-bucket diagnostic is the tripwire).
     *

@@ -1,15 +1,19 @@
 package graft.operators
 
-import graft.SparkSpec
+import scala.jdk.CollectionConverters._
+
+import graft.{SourceGuard, SparkSpec}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ContextBridge
 
 /** Pins [[Checkpoint]]: observed-count stats that do not compound
   * across self-joined rounds, metrics read off the checkpoint job, the
-  * input's partitioning kept — and that no main-code site checkpoints
-  * by hand.
+  * input's partitioning kept, the job named after its caller — and that
+  * no main-code site checkpoints by hand.
   */
 class CheckpointSpec extends SparkSpec {
 
@@ -66,20 +70,28 @@ class CheckpointSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
+  test("a checkpoint job is named after the line that pinned it") {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // adaptive execution runs the shuffle stage as a job of its own
+      Checkpoint(spark.range(0, 100).groupBy((col("id") % 10).as("k")).count())
+      ContextBridge.drainListeners(spark)
+    } finally sc.removeSparkListener(listener)
+    val named = sites.asScala.toSeq.filter(_.startsWith("localCheckpoint"))
+    assert(sites.size >= 2 && named.size === 1, sites.asScala.mkString("\n"))
+    assert(named.head.startsWith("localCheckpoint at CheckpointSpec.scala:"), named.head)
+    // the caller's own call site is left as it was
+    assert(sc.getLocalProperty("callSite.short") === null)
+  }
+
   test("main code checkpoints only through Checkpoint") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val offenders = files(root)
-      .filter(f => f.getName.endsWith(".scala") && f.getName != "Checkpoint.scala")
-      .flatMap { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().zipWithIndex.collect {
-          case (line, i) if line.contains(".localCheckpoint(") => s"${f.getPath}:${i + 1}"
-        }.toList
-        finally src.close()
-      }
+    val offenders = SourceGuard.offenders(".localCheckpoint(", "operators/Checkpoint.scala")
     assert(offenders.isEmpty,
       s"hand-written localCheckpoint (use Checkpoint):\n${offenders.mkString("\n")}")
   }
